@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Beyond-sf0.1 probe data: amplify an sf dir ~N× into `outDir` so the
@@ -45,14 +45,7 @@ object Amplify {
     // the probes measure the same entries with a splittable input, i.e.
     // what the decode floors do on real multi-file cluster layouts.
     val rowGroupMB = if (args.length > 3) Some(args(3).toInt) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create()
     new java.io.File(out).mkdirs()
 
     // dims (and the embeddings corpus, whose d-queries stay 1×):

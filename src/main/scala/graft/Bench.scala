@@ -24,15 +24,17 @@ import org.apache.spark.sql.SparkSession
   * codegen and page-cache warmup; the warm pass is engine throughput.
   * One contended single-shot capture made round 3 look 2× slower than
   * reruns — reporting both walls makes that failure mode visible in
-  * the snapshot itself. `value` stays the cold wall (comparable to
-  * prior rounds); `wall` (the LAST field, which survives driver tail
-  * truncation) is the warm wall; the per-query map on the JSON line is
-  * the WARM pass. Per-query numbers are latencies under concurrency
-  * (they inflate with queueing — compare plan shapes, not these,
-  * across concurrency settings).
+  * the snapshot itself. `value` is the cold wall; `wall` is the warm
+  * wall, repeated as `wall_tail` (the LAST field, which survives a
+  * capture that truncates the tail); the per-query map on the JSON
+  * line is the WARM pass. Per-query numbers are latencies under
+  * concurrency (they inflate with queueing — compare plan shapes, not
+  * these, across concurrency settings). Every query is drained through
+  * the `noop` sink (Probe.drain), so every column of every row is
+  * produced.
   *
   * Self-diagnostics ride the line: `probes` are the parse-only
-  * q49/q53 timings over pre-materialized payload parquet (engine cost
+  * q49/q53/q54 timings over pre-materialized payload parquet (engine cost
   * with the test scaffolding factored out — see ParseProbes), run in a
   * FRESH SparkSession so two suite passes of session state can't
   * pollute them (round 7: 6.7-10s in-suite vs 1.58s solo); `cal` is a
@@ -48,19 +50,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-    // same hook as QProbe/StageProbe: on a row-group-bounded twin dir
-    // (Amplify arg 4) shrink scan splits so the scan floors fan out —
-    // meaningless on the harness's single-row-group files
-    sys.env.get("GRAFT_MAX_PART_BYTES").foreach(v =>
-      b.config("spark.sql.files.maxPartitionBytes", v))
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create("spark.scheduler.mode" -> "FAIR")
     // Session warmup: executor threads, codegen compiler, parquet
     // footer reads — so init cost isn't billed to the first query.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -152,7 +142,7 @@ object Bench {
           // all jobs this query submits from this thread)
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
           val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+          val ok = try { Probe.drain(fn(spark, sfDir)); true } catch { case _: Throwable => false }
           (name, (System.nanoTime() - t0) / 1e9, ok)
         }
       }
@@ -326,66 +316,49 @@ object Bench {
           hist.map(c => "%.3f".formatLocal(java.util.Locale.ROOT, c))
             .mkString("""{"cals":[""", ",", "]}").getBytes("UTF-8"))
       } catch { case _: Throwable => () }
-    val errs = (cold ++ warm).collect { case (k, _, false) => "\"" + k + "\"" }
-      .distinct.mkString("[", ",", "]")
+    val errs = (cold ++ warm).collect { case (k, _, false) => k }.distinct
     spark.stop()
 
-    // Parse-only probes (q49/q53 minus their payload-BUILD scaffolding):
-    // materialize the payload parquet once, then time parse+flatten
-    // alone — the engine cost a 100 TB deployment actually pays. Run in
-    // a FRESH SparkSession: round 7's in-suite probes read 6.7-10s for
-    // q53_parse vs 1.58s solo (QProbe, same code/data) — two suite
-    // passes leave the session hot with catalog entries, the reliable-
-    // checkpoint dir's ContextCleaner churn, and cached/evicted blocks,
-    // and the probes inherited all of it. A fresh session measures the
-    // engine, matching what QProbe reports. Second (warm) run is the
-    // number. Failure-isolated (-1, never a lost line): a probe crash
-    // must not discard two completed suite passes.
+    // Parse-only probes (q49/q53/q54 minus their payload-BUILD
+    // scaffolding, see ParseProbes), timed by Probe.warm. Run in a FRESH
+    // SparkSession: round 7's in-suite probes read 6.7-10s for q53_parse
+    // vs 1.58s solo (same code/data) — two suite passes leave the session
+    // hot with catalog entries, the reliable-checkpoint dir's
+    // ContextCleaner churn, and cached/evicted blocks, and the probes
+    // inherited all of it. Failure-isolated (-1, never a lost line): a
+    // probe crash must not discard two completed suite passes.
     val probes: Seq[(String, Double)] =
       try {
-        val ps = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        ps.sparkContext.setLogLevel("WARN")
-        try {
-          ParseProbes.prepare(ps, sfDir, ParseProbes.names).toSeq.sortBy(_._1)
-            .map { case (name, fn) =>
-              def once(): Double = {
-                val t0 = System.nanoTime()
-                fn().count()
-                (System.nanoTime() - t0) / 1e9
-              }
-              // one cold run pays the fresh session's codegen/JIT, then
-              // min of two warm runs — a single warm pass still jittered
-              // ~2× across captures (GC from the stopped suite session)
-              (name, try { once(); math.min(once(), once()) }
-                catch { case _: Throwable => -1.0 })
-            }
-        } finally ps.stop()
+        val ps = Session.create()
+        try Probe.warm(ps, sfDir, ParseProbes.names) finally ps.stop()
       } catch { case _: Throwable => ParseProbes.names.map(_ -> -1.0) }
-    // A failed query reports -1, never a wall-clock that looks like a pass.
-    // Values are truncated to 3 decimals and only ONE per-query map
-    // (the warm pass) goes on the JSON line: round 4's line carried
-    // both passes at full double precision (~6 kB), overflowed the
-    // driver's tail capture, and the snapshot failed to parse — the
-    // compact line must fit the capture window WHOLE.
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def fmt(rs: Seq[(String, Double, Boolean)]): String =
-      rs.map { case (k, v, ok) => s"\"" + k + "\":" + (if (ok) f3(v) else "-1") }
-        .mkString("{", ",", "}")
-    val probesJson = probes.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // Truncation-proof field order (r20 verdict: the r19 capture clipped
-    // the line's TAIL and lost every headline field behind the 142-entry
-    // per-query map): ALL contract fields — value/wall_cold/wall/cal/
-    // contended/... — lead the object and the bulky per-query map goes
-    // last, so a clipped capture costs per-query detail, never the
-    // headline. `wall` is ALSO repeated as the very last field (same
-    // value, duplicate JSON keys parse last-wins identically) because
-    // the r3-era driver clipped the HEAD instead — either truncation
-    // direction now keeps the headline.
-    println(s"""{"metric":"total","value":${f3(wallCold)},"unit":"sec","pass":"warm","wall_cold":${f3(wallCold)},"wall":${f3(wallWarm)},"cal":${f3(cal)},"ext_cores":${f3(ext)},"io_stall":${f3(io)},"contended":$contended,"retries":$retries,"sf":"$sfDir","errors":$errs,"probes":$probesJson,"queries":${fmt(warm)},"wall":${f3(wallWarm)}}""")
+    println(headline(wallCold, wallWarm, cal, ext, io, contended, retries, sfDir,
+      errs, probes, warm))
+  }
+
+  /** The headline JSON line. Truncation-proof field order (r20 verdict:
+    * the r19 capture clipped the line's TAIL and lost every headline
+    * field behind the 142-entry per-query map): ALL contract fields —
+    * value/wall_cold/wall/cal/contended/... — lead the object and the
+    * bulky per-query map goes last, so a clipped capture costs per-query
+    * detail, never the headline. `wall_tail` repeats `wall` as the very
+    * last field because r3-era captures clipped the HEAD instead —
+    * either truncation direction keeps the headline. Values are truncated
+    * to 3 decimals and only ONE per-query map (the warm pass) rides the
+    * line: round 4's line carried both passes at full double precision
+    * (~6 kB), overflowed the tail capture, and failed to parse.
+    * A failed query reports -1, never a wall-clock that looks like a pass.
+    */
+  def headline(wallCold: Double, wallWarm: Double, cal: Double, ext: Double,
+      io: Double, contended: Boolean, retries: Int, sfDir: String,
+      errors: Seq[String], probes: Seq[(String, Double)],
+      queries: Seq[(String, Double, Boolean)]): String = {
+    import Probe.f3
+    def obj(kvs: Seq[(String, String)]) =
+      kvs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val errs = errors.map(e => s""""$e"""").mkString("[", ",", "]")
+    val ps = obj(probes.map { case (k, v) => k -> f3(v) })
+    val qs = obj(queries.map { case (k, v, ok) => k -> (if (ok) f3(v) else "-1") })
+    s"""{"metric":"total","value":${f3(wallCold)},"unit":"sec","pass":"warm","wall_cold":${f3(wallCold)},"wall":${f3(wallWarm)},"cal":${f3(cal)},"ext_cores":${f3(ext)},"io_stall":${f3(io)},"contended":$contended,"retries":$retries,"sf":"$sfDir","errors":$errs,"probes":$ps,"queries":$qs,"wall_tail":${f3(wallWarm)}}"""
   }
 }

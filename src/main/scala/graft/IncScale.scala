@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Steady-state probe for the incremental near-dup dedup cycle: build
@@ -24,13 +23,9 @@ object IncScale {
     val storeDocs = if (args.length > 0) args(0).toLong else 1000000L
     val batchDocs = if (args.length > 1) args(1).toLong else 10000L
     val layout = if (args.length > 2) args(2) else "path"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
+    val spark = Session.create("spark.sql.shuffle.partitions" -> "64",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft_incscale_wh").toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // same corpus shape as ScaleSmoke's realistic stage: 30-word docs
     // over a 10k vocab, 1% planted duplicates

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,11 +15,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 10000000L
     val only = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.create("spark.sql.shuffle.partitions" -> "64")
     def gen(hot: Double) = spark.read.format("graft-ticks")
       .option("rows", rows.toString).option("partitions", "64")
       .option("hotfraction", hot.toString).load()
@@ -31,37 +26,36 @@ object ScaleSmoke {
         println(f"[scale] $name%-28s ${(System.nanoTime() - t0) / 1e9}%6.1f s rows=$r")
       }
     val uniform = gen(0.0)
-    time(s"gen+count ${rows / 1000000}M") { uniform.count() }
+    time(s"gen+count ${rows / 1000000}M") { Probe.drain(uniform) }
     time("ohlc bars (group+2 windows)") {
       val w1 = Window.partitionBy(col("user_id"), col("bar")).orderBy("ts", "event_id")
-      uniform.withColumn("bar", date_trunc("hour", col("ts")))
+      Probe.drain(uniform.withColumn("bar", date_trunc("hour", col("ts")))
         .withColumn("rn", row_number().over(w1))
         .groupBy("user_id", "bar")
         .agg(max(when(col("rn") === 1, col("value"))).as("open_v"),
-          max("value").as("high_v"), min("value").as("low_v"), count(lit(1)).as("n"))
-        .count()
+          max("value").as("high_v"), min("value").as("low_v"), count(lit(1)).as("n")))
     }
     time("rolling avg window") {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-10, 0)
-      uniform.withColumn("r", avg("value").over(w)).filter(col("r") > 0).count()
+      Probe.drain(uniform.withColumn("r", avg("value").over(w)).filter(col("r") > 0))
     }
     time("asof custom join 2Mx8M") {
       val trades = uniform.filter(col("event_type") === "purchase")
         .select("event_id", "user_id", "ts", "value")
       val quotes = uniform.filter(col("event_type") =!= "purchase")
         .select(col("user_id").as("user_id_r"), col("ts").as("q_ts"), col("value").as("q_value"))
-      plans.AsOf.join(trades, quotes, "user_id", "ts", "q_ts").count()
+      Probe.drain(plans.AsOf.join(trades, quotes, "user_id", "ts", "q_ts"))
     }
     val skewed = gen(0.5) // 50% of rows on one key
     time("skewed agg (AQE)") {
-      skewed.groupBy("user_id").agg(sum("value"), count(lit(1))).count()
+      Probe.drain(skewed.groupBy("user_id").agg(sum("value"), count(lit(1))))
     }
     time("skewed agg (salted)") {
-      operators.SkewOps.saltedSumCount(skewed, "user_id", "value", 64).count()
+      Probe.drain(operators.SkewOps.saltedSumCount(skewed, "user_id", "value", 64))
     }
     time("exact dedup 10M") {
-      uniform.select(col("user_id"), col("event_type"),
-        floor(col("value")).as("v")).distinct().count()
+      Probe.drain(uniform.select(col("user_id"), col("event_type"),
+        floor(col("value")).as("v")).distinct())
     }
     // LLM-pipeline path at 1M synthetic docs: 30-word salads over a
     // 40-word vocab (duplicates guaranteed by the pigeonhole at this
@@ -73,24 +67,24 @@ object ScaleSmoke {
     var pairs: org.apache.spark.sql.DataFrame = null
     time("minhash+lsh 1M docs") {
       pairs = operators.Dedup.minhashLshPairs(docs1m).cache()
-      pairs.count()
+      Probe.drain(pairs)
     }
     time("dup clusters from pairs") {
-      operators.Dedup.connectedComponents(pairs.select("id_a", "id_b")).count()
+      Probe.drain(operators.Dedup.connectedComponents(pairs.select("id_a", "id_b")))
     }
     // bounded CC at scale settings: broadcast gate forced OFF (the path
     // a corpus-sized label frame takes at 100 TB) — shuffle join each
     // round, natural shuffle partitioning, no driver barriers inside
     time("dup clusters bounded/shuffle") {
-      operators.Dedup.connectedComponentsBounded(pairs.select("id_a", "id_b"),
-        broadcastMaxEdges = 0L).count()
+      Probe.drain(operators.Dedup.connectedComponentsBounded(pairs.select("id_a", "id_b"),
+        broadcastMaxEdges = 0L))
     }
     // simhash band pairing at 1M docs: fingerprints from the same word
     // salads, 4×16-bit bands → verified hamming ≤ 3 pairs.
     time("simhash pairs 1M docs") {
       val fps = docs1m.select(col("doc_id"),
         graft.functions.VectorExprs.simhash64(col("ws")).as("simhash"))
-      operators.Dedup.simhashPairs(fps).count()
+      Probe.drain(operators.Dedup.simhashPairs(fps))
     }
     // Realistic 10k-word vocab: LSH banding's boundedness rests on the
     // similarity distribution of real corpora (random doc pairs share
@@ -108,7 +102,7 @@ object ScaleSmoke {
           .as("text"))
     // LSH-candidate jaccard at 1M docs — the scale-safe d4 composition.
     time("jaccard-via-lsh 1M docs") {
-      operators.Dedup.ngramJaccardViaLsh(docsBig).count()
+      Probe.drain(operators.Dedup.ngramJaccardViaLsh(docsBig))
     }
     // d62 containment at 1M docs over a ZIPFIAN (log-uniform) 100k-word
     // vocabulary — the prefix filter's boundedness claim IS the Zipf
@@ -133,7 +127,7 @@ object ScaleSmoke {
                  |  concat('w', cast(cast(pow(1000000.0,
                  |    pmod(xxhash64(seed * 1000000 + i), 100000) / 100000.0) as long) as string))))""".stripMargin)
             .as("text"))
-      val n = operators.Dedup.containmentOf(zdocs).count()
+      val n = Probe.drain(operators.Dedup.containmentOf(zdocs))
       require(n >= 5000, s"planted subset pairs missing: $n")
       n
     }
@@ -142,12 +136,12 @@ object ScaleSmoke {
     // (b) a 150k-key remap ⇒ production-shaped small groups. Both are
     // one hash shuffle + a linear pass per group.
     time("cep 10M events 150 whales") {
-      operators.Cep.eventPatternOf(uniform).count()
+      Probe.drain(operators.Cep.eventPatternOf(uniform))
     }
     time("cep 10M events 150k keys") {
-      operators.Cep.eventPatternOf(
+      Probe.drain(operators.Cep.eventPatternOf(
         uniform.withColumn("user_id",
-          col("user_id") * 1000 + pmod(col("event_id"), lit(1000)))).count()
+          col("user_id") * 1000 + pmod(col("event_id"), lit(1000)))))
     }
     // q65 whale: ONE user, 100k start∩mid (tag-4) rows at 1 s spacing —
     // every segment sits inside one 48 h span, so every view holds an
@@ -165,8 +159,8 @@ object ScaleSmoke {
         col("id").as("event_id"),
         when(pmod(col("id"), lit(20000)) === 19999, lit("purchase"))
           .otherwise(lit("view")).as("event_type"))
-      val n = operators.Cep.eventPatternOf(whale,
-        midTypes = Seq("click", "view"), skipToNextRow = true).count()
+      val n = Probe.drain(operators.Cep.eventPatternOf(whale,
+        midTypes = Seq("click", "view"), skipToNextRow = true))
       require(n == whaleN / 20000 * 19999, s"whale match count $n unexpected")
       n
     }
@@ -182,7 +176,7 @@ object ScaleSmoke {
         when(pmod(col("id"), lit(4)) === 0, lit("view"))
           .when(pmod(col("id"), lit(4)) === 3, lit("purchase"))
           .otherwise(lit("click")).as("event_type"))
-      val n = operators.Cep.eventPatternOf(whale, minMid = 1, maxMid = 2).count()
+      val n = Probe.drain(operators.Cep.eventPatternOf(whale, minMid = 1, maxMid = 2))
       require(n == whaleN / 4, s"bounded whale match count $n != ${whaleN / 4}")
       n
     }
@@ -191,7 +185,7 @@ object ScaleSmoke {
     // corpus. ~5000 planted duplicate pairs ⇒ expect ≈995k survivors.
     time("d22 composed dedup 1M docs") {
       val pairs = operators.Dedup.ngramJaccardViaLsh(docsBig).select("id_a", "id_b")
-      val kept = operators.Dedup.dedupedCorpus(docsBig, pairs).count()
+      val kept = Probe.drain(operators.Dedup.dedupedCorpus(docsBig, pairs))
       require(kept >= 990000 && kept < 1000000, s"unexpected survivor count $kept")
       kept
     }
@@ -209,7 +203,8 @@ object ScaleSmoke {
           docsBig.filter(pmod(col("doc_id"), lit(3)) === i), incRoot,
           blockCols = Seq.empty, bucketedIndex = true)
       }
-      val kept = operators.IncrementalDedup.corpus(spark, incRoot, blockCols = Seq.empty).count()
+      val kept = Probe.drain(
+        operators.IncrementalDedup.corpus(spark, incRoot, blockCols = Seq.empty))
       require(kept >= 990000 && kept < 1000000, s"unexpected incremental survivor count $kept")
       kept
     }
@@ -225,7 +220,7 @@ object ScaleSmoke {
             .as("text"))
       operators.IncrementalDedup.upsertBatch(novel, incRoot, blockCols = Seq.empty,
         bucketedIndex = true)
-      spark.read.parquet(s"$incRoot/docs").count()
+      Probe.drain(spark.read.parquet(s"$incRoot/docs"))
     }
     // the full composed corpus build at 1M docs, all stages on: scrub →
     // gate → exact dedup (drops the planted pairs) → LSH near-dup →
@@ -241,19 +236,19 @@ object ScaleSmoke {
         maxRepFrac = 0.9,
         mixTargetFrac = Some(0.5))
       println("[scale]   stages: " + stats.map { case (n, c) => s"$n=$c" }.mkString(" "))
-      chunks.count()
+      Probe.drain(chunks)
     }
     // curation passes at 1M docs. Decontamination against a REALISTIC
     // eval slice (~1k docs — eval suites are tiny; that's what makes
     // the gram set broadcastable): planted duplicate pairs guarantee
     // benchmark 8-grams appear in training docs.
     time("decontaminate 1M vs 1k bench") {
-      operators.Curation.decontaminateOf(
+      Probe.drain(operators.Curation.decontaminateOf(
         docsBig.filter(col("doc_id") % 997 =!= 0),
-        docsBig.filter(col("doc_id") % 997 === 0)).count()
+        docsBig.filter(col("doc_id") % 997 === 0)))
     }
     time("repetition score 1M docs") {
-      operators.Curation.repetitionScoreOf(docsBig).count()
+      Probe.drain(operators.Curation.repetitionScoreOf(docsBig))
     }
     // paired probe for the gram hot loop: the tight-loop NgramStats
     // expression vs the interpreted transform+array_distinct HOF over
@@ -261,16 +256,16 @@ object ScaleSmoke {
     // twin of the DotProductI8 lesson; run with stageFilter "gram"
     val gramCached = docsBig
       .select(col("doc_id"), split(col("text"), " ").as("ws")).cache()
-    time("gram probe cache prime") { gramCached.count() }
+    time("gram probe cache prime") { Probe.drain(gramCached) }
     time("gram stats EXPR 1M cached") {
-      gramCached.select(graft.functions.VectorExprs.ngramStats(col("ws"), 3).as("st"))
-        .filter(col("st.n_distinct") > 0).count()
+      Probe.drain(gramCached.select(graft.functions.VectorExprs.ngramStats(col("ws"), 3).as("st"))
+        .filter(col("st.n_distinct") > 0))
     }
     time("gram stats HOF 1M cached") {
-      gramCached.select(expr(
+      Probe.drain(gramCached.select(expr(
         """transform(sequence(1, size(ws) - 2),
           |  i -> array_join(slice(ws, i, 3), ' '))""".stripMargin).as("ngs"))
-        .filter(size(array_distinct(col("ngs"))) > 0).count()
+        .filter(size(array_distinct(col("ngs"))) > 0))
     }
     gramCached.unpersist()
     // d67 winnowing at 1M LONG docs (128 tokens — 4× the corpus docs,
@@ -296,7 +291,7 @@ object ScaleSmoke {
             |  i -> concat('w', cast(pmod(xxhash64(id * 131 + i), 100000) as string))))
             |END""".stripMargin).as("text"))
       .cache()
-    time(s"winnow probe cache prime ${winN / 1000}k") { winDocs.count() }
+    time(s"winnow probe cache prime ${winN / 1000}k") { Probe.drain(winDocs) }
     // paired probe: gram hashing alone vs hashing + window-min loop
     // over the SAME cached input — the difference IS the WinnowSelect
     // loop (sum-of-sizes on both sides so neither pays an explode)
@@ -312,16 +307,16 @@ object ScaleSmoke {
         .agg(sum("n")).collect()(0).getLong(0)
     }
     time(s"winnow fingerprints ${winN / 1000}k long") {
-      winDocs.select(
+      Probe.drain(winDocs.select(
         graft.functions.VectorExprs.winnowSelect(
           graft.functions.VectorExprs.ngramHashes(
             split(lower(col("text")), " "), 4), 8).as("fp"))
-        .select(explode(col("fp")).as("h")).count()
+        .select(explode(col("fp")).as("h")))
     }
     time(s"winnow overlap ${winN / 1000}k long docs") {
       // planted geometry: 6 pairs per full 1024-id bucket, minus
       // boundary effects — pair volume LINEAR in winN by construction
-      val pairs = operators.Dedup.winnowOverlapOf(winDocs).count()
+      val pairs = Probe.drain(operators.Dedup.winnowOverlapOf(winDocs))
       require(pairs >= winN * 55 / 10000 && pairs < winN * 70 / 10000,
         s"unexpected winnow pair count $pairs for $winN docs")
       pairs
@@ -332,8 +327,8 @@ object ScaleSmoke {
     time("domain mix sample 1M docs") {
       val sourced = docsBig.withColumn("source",
         expr("concat('src', if(doc_id % 1000 < 700, 0, doc_id % 10))"))
-      val kept = operators.Curation.domainMixSampleOf(
-        sourced.select("doc_id", "source")).count()
+      val kept = Probe.drain(operators.Curation.domainMixSampleOf(
+        sourced.select("doc_id", "source")))
       require(kept > 100000 && kept < 900000, s"unexpected mix sample size $kept")
       kept
     }
@@ -343,20 +338,20 @@ object ScaleSmoke {
     time("token budget mix 1M docs") {
       val sourced = docsBig.withColumn("source",
         expr("concat('src', if(doc_id % 1000 < 700, 0, doc_id % 10))"))
-      val kept = operators.Curation.tokenBudgetMixOf(
-        sourced.select("doc_id", "source", "text"), targetFrac = 0.5).count()
+      val kept = Probe.drain(operators.Curation.tokenBudgetMixOf(
+        sourced.select("doc_id", "source", "text"), targetFrac = 0.5))
       require(kept > 100000 && kept < 900000, s"unexpected token mix size $kept")
       kept
     }
     time("unigram nll 1M docs") {
-      operators.CorpusStats.unigramNllOf(docsBig, vocabCap = 1000).count()
+      Probe.drain(operators.CorpusStats.unigramNllOf(docsBig, vocabCap = 1000))
     }
     // Gopher char-weighted rules (d43): seven per-row gram maps, no
     // shuffle — the stage demonstrates the narrow shape holds at 1M;
     // hash-random 30-word docs essentially never trip the char cuts
     time("gopher rules 1M docs") {
-      val n = operators.Curation.gopherRepetitionOf(docsBig)
-        .filter(col("keep")).count()
+      val n = Probe.drain(operators.Curation.gopherRepetitionOf(docsBig)
+        .filter(col("keep")))
       require(n > 900000, s"unexpected gopher keep count $n")
       n
     }
@@ -371,7 +366,7 @@ object ScaleSmoke {
       val out = operators.Curation.boilerplateScrubOf(templ)
       val dropped = out.agg(sum(col("n_boiler"))).head.getLong(0)
       require(dropped >= 10000, s"planted template must be scrubbed: $dropped")
-      out.count()
+      Probe.drain(out)
     }
     // d55 URL curation at 1M docs: per-row regex normalization chain +
     // one url_norm groupBy/join-back; 0.5% planted shared-path dups
@@ -382,7 +377,7 @@ object ScaleSmoke {
                |  if(id % 200 = 0, 'dup', cast(id as string)),
                |  if(id % 4 = 0, '?utm_source=x', ''))""".stripMargin).as("url"))
       val out = operators.Curation.urlFilterOf(urls, Seq("host7.example.com"))
-      val kept = out.filter(col("keep")).count()
+      val kept = Probe.drain(out.filter(col("keep")))
       require(kept < 1000000 && kept > 900000, s"unexpected url keep count $kept")
       kept
     }
@@ -390,7 +385,7 @@ object ScaleSmoke {
     // (doc,bucket) and per-doc hash aggs — no vocabulary axis by
     // construction, so the 10k-word synthetic vocab is irrelevant
     time("hashed embed 1M docs") {
-      val n = operators.Retrieval.hashedEmbedOf(docsBig).count()
+      val n = Probe.drain(operators.Retrieval.hashedEmbedOf(docsBig))
       require(n > 1000000, s"unexpected sparse-embedding row count $n")
       n
     }
@@ -422,20 +417,20 @@ object ScaleSmoke {
       1000000L
     }
     time("corpus report 1M docs") {
-      operators.CorpusStats.corpusReportOf(docsBig
+      Probe.drain(operators.CorpusStats.corpusReportOf(docsBig
         .withColumn("lang", lit("en"))
-        .withColumn("source", expr("concat('src', doc_id % 10)"))).count()
+        .withColumn("source", expr("concat('src', doc_id % 10)"))))
     }
     // bigram-LM NLL (d44) at 1M docs / ~29M bigrams: the count-join
     // shape — two map-side-combined shuffles over gram keys + joins
     // back; linear in gram volume, no pairwise anything
     time("bigram lm 1M docs") {
-      operators.Curation.bigramNllOf(docsBig).count()
+      Probe.drain(operators.Curation.bigramNllOf(docsBig))
     }
     // DSIR weights (d46) at 1M docs vs a ~1k-doc target slice
     time("dsir weights 1M docs") {
-      operators.Curation.dsirWeightsOf(docsBig,
-        docsBig.filter(col("doc_id") % 997 === 0)).count()
+      Probe.drain(operators.Curation.dsirWeightsOf(docsBig,
+        docsBig.filter(col("doc_id") % 997 === 0)))
     }
     // BM25 (d48) at 1M docs: 5 queries over the synthetic vocab — the
     // literal-IN postings prune touches ~0.3% of the word stream
@@ -443,7 +438,7 @@ object ScaleSmoke {
       val qs = Seq(1 -> Seq("w17", "w2345", "w999"), 2 -> Seq("w1", "w8888"),
         3 -> Seq("w42", "w4242"), 4 -> Seq("w7", "w77", "w777"),
         5 -> Seq("w3141", "w5926"))
-      val n = operators.Retrieval.bm25SearchOf(docsBig, qs).count()
+      val n = Probe.drain(operators.Retrieval.bm25SearchOf(docsBig, qs))
       require(n == 50, s"unexpected bm25 hit count $n")
       n
     }
@@ -459,26 +454,26 @@ object ScaleSmoke {
       operators.Retrieval.buildTermIndex(docsBig, idxRoot); 1L
     }
     time("bm25 indexed query") {
-      val n = operators.Retrieval.bm25SearchIndexed(spark, idxRoot, bmQs).count()
+      val n = Probe.drain(operators.Retrieval.bm25SearchIndexed(spark, idxRoot, bmQs))
       require(n == 50, s"unexpected indexed bm25 hit count $n")
       n
     }
     // sequence packing (d49) at 1M docs: one shuffle to ~2k bounded
     // (source, shard) groups, a tight loop each
     time("sequence pack 1M docs") {
-      operators.Curation.sequencePackOf(docsBig
+      Probe.drain(operators.Curation.sequencePackOf(docsBig
         .withColumn("source", expr("concat('src', doc_id % 10)")),
-        capacity = 256, shardSize = 512).count()
+        capacity = 256, shardSize = 512))
     }
     // unigram KL drift (d50) at 1M docs: 10 sources x 10k vocab grid
     time("unigram drift 1M docs") {
-      operators.CorpusStats.unigramDriftOf(docsBig
-        .withColumn("source", expr("concat('src', doc_id % 10)"))).count()
+      Probe.drain(operators.CorpusStats.unigramDriftOf(docsBig
+        .withColumn("source", expr("concat('src', doc_id % 10)"))))
     }
     // boilerplate mining at 1M docs: the planted duplicate pairs carry
     // identical full-size windows, so the multi-doc chunk groupBy bites
     time("template chunks 1M docs") {
-      val n = graft.functions.TextFns.templateChunksOf(docsBig).count()
+      val n = Probe.drain(graft.functions.TextFns.templateChunksOf(docsBig))
       require(n > 0, "no template chunks found despite planted duplicates")
       n
     }
@@ -487,7 +482,7 @@ object ScaleSmoke {
     // maximal 30-token run (11 consecutive shared 20-gram positions);
     // random 20-gram collisions over the 10k vocab are ~impossible
     time("exact substr runs 1M docs") {
-      val n = operators.Dedup.exactSubstrRunsOf(docsBig, 20).count()
+      val n = Probe.drain(operators.Dedup.exactSubstrRunsOf(docsBig, 20))
       require(n >= 10000 && n < 20000, s"unexpected duplicated-run count $n")
       n
     }
@@ -495,7 +490,7 @@ object ScaleSmoke {
     // one 30-token non-first run -> fully covered -> drops out, so
     // survivors ≈ 1M - 5k and almost no doc is partially clipped
     time("exact substr clip 1M docs") {
-      val n = operators.Dedup.exactSubstrClipOf(docsBig, 20).count()
+      val n = Probe.drain(operators.Dedup.exactSubstrClipOf(docsBig, 20))
       require(n >= 990000 && n < 1000000, s"unexpected survivor count $n")
       n
     }
@@ -507,10 +502,10 @@ object ScaleSmoke {
       expr("""transform(sequence(0, 63),
              |  i -> cast(pmod(xxhash64(id * 64 + i), 2000) / 1000.0 - 1.0 as float))""".stripMargin)
         .as("embedding")).cache()
-    time("pq vec gen+cache 1M") { vecsBig.count() }
+    time("pq vec gen+cache 1M") { Probe.drain(vecsBig) }
     time("pq train+search 1M vecs") {
-      operators.Similarity.pqTopKOf(vecsBig,
-        vecsBig.filter(col("vec_id") < 5), refine = 100).count()
+      Probe.drain(operators.Similarity.pqTopKOf(vecsBig,
+        vecsBig.filter(col("vec_id") < 5), refine = 100))
     }
     // IVF coarse quantizer at 1M×64 (k = √n = 1000): k-means + 2-probe
     // multi-assign on the NearestBuckets in-projection path. The
@@ -523,14 +518,14 @@ object ScaleSmoke {
       val plan = assigned.queryExecution.executedPlan.toString
       require(!plan.contains("Exchange"),
         s"assignment must stay a narrow projection, got:\n$plan")
-      assigned.count()
+      Probe.drain(assigned)
     }
     // MMR diversity (d66) at 1M×64: the distributed half is ONE
     // narrow cosine-to-mean projection + TakeOrdered — the greedy
     // over the 128-pool is corpus-size-independent driver work, so
     // the stage cost IS the scan+top-k cost.
     time("mmr select 1M vecs") {
-      operators.Similarity.mmrSelectOf(vecsBig).count()
+      Probe.drain(operators.Similarity.mmrSelectOf(vecsBig))
     }
     vecsBig.unpersist()
 
@@ -543,7 +538,7 @@ object ScaleSmoke {
         pmod(xxhash64(col("id")), lit(1000000L)).as("id_a"),
         pmod(xxhash64(col("id") + lit(7000000000L)), lit(1000000L)).as("id_b"))
         .filter(col("id_a") =!= col("id_b"))
-      operators.Dedup.pageRankOf(edges).count()
+      Probe.drain(operators.Dedup.pageRankOf(edges))
     }
     // d69 weighted twin at the same graph scale: hash-varied integer
     // 1e-6-unit weights (the registered entry's jaccard-unit range)
@@ -553,7 +548,7 @@ object ScaleSmoke {
         pmod(xxhash64(col("id") + lit(7000000000L)), lit(1000000L)).as("id_b"),
         (lit(800000L) + pmod(xxhash64(col("id") + lit(3)), lit(200001L))).as("w_units"))
         .filter(col("id_a") =!= col("id_b"))
-      operators.Dedup.pageRankWeightedOf(edgesW).count()
+      Probe.drain(operators.Dedup.pageRankWeightedOf(edgesW))
     }
 
     // SemDeDup (d45) at 200k×64 vectors with ~200-vector clusters
@@ -568,10 +563,10 @@ object ScaleSmoke {
                |  i -> cast(pmod(xxhash64((if(id % 100 < 2, (id div 2) * 2, id)) * 64 + i),
                |                 2000) / 1000.0 - 1.0 as float))""".stripMargin)
           .as("embedding")).cache()
-      semVecs.count()
-      val dropped = operators.Similarity
+      Probe.drain(semVecs)
+      val dropped = Probe.drain(operators.Similarity
         .semDedupOf(semVecs, threshold = 0.99, k = Some(1000))
-        .filter(!col("kept")).count()
+        .filter(!col("kept")))
       semVecs.unpersist()
       require(dropped == 2000, s"unexpected dropped count $dropped")
       dropped
@@ -589,8 +584,8 @@ object ScaleSmoke {
                |  i -> cast(pmod(xxhash64((if(id % 100 < 2, (id div 2) * 2, id)) * 64 + i),
                |                 2000) / 1000.0 - 1.0 as float))""".stripMargin)
           .as("embedding")).cache()
-      hnVecs.count()
-      val n = operators.Similarity.hardTripletsOf(hnVecs, k = Some(1000)).count()
+      Probe.drain(hnVecs)
+      val n = Probe.drain(operators.Similarity.hardTripletsOf(hnVecs, k = Some(1000)))
       hnVecs.unpersist()
       require(n >= 4000, s"unexpected hard-triplet count $n")
       n
@@ -606,12 +601,12 @@ object ScaleSmoke {
         expr("""transform(sequence(0, 63),
                |  i -> cast(pmod(xxhash64(id * 64 + i), 2000) / 1000.0 - 1.0 as float))""".stripMargin)
           .as("embedding")).cache()
-      kgVecs.count()
+      Probe.drain(kgVecs)
       val kg = operators.Similarity.knnGraphOf(kgVecs)
       val plan = kg.queryExecution.executedPlan.toString
       require(!plan.contains("Window"),
         s"per-anchor top-k must stay a bounded aggregate, got:\n$plan")
-      val n = kg.count()
+      val n = Probe.drain(kg)
       kgVecs.unpersist()
       require(n == 200000L * 5, s"expected full 5-NN coverage, got $n")
       n
@@ -661,9 +656,9 @@ object ScaleSmoke {
       val t0v = System.nanoTime()
       val view = operators.Similarity
         .knnFromLog(spark.read.parquet(dir + "/log"))
-      val nView = view.count()
+      val nView = Probe.drain(view)
       val vWall = (System.nanoTime() - t0v) / 1e9
-      val logRows = spark.read.parquet(dir + "/log").count()
+      val logRows = Probe.drain(spark.read.parquet(dir + "/log"))
       require(logRows == nView,
         s"batch-20 cadence must leave log == view: $logRows vs $nView")
       val med = walls.sorted.apply(walls.size / 2)
@@ -692,7 +687,7 @@ object ScaleSmoke {
           / lit(1000.0) + lit(0.8)).as("jaccard"))
         .filter(col("id_a") < col("id_b")) // keeps ~25k of the 50k draws
       val t = operators.Curation.contrastiveTripletsOf(prs, docs1m2)
-      val n = t.count()
+      val n = Probe.drain(t)
       // ~25k pairs → ~50k oriented anchors, and md5 negatives against a
       // 1M corpus virtually never collide with the pair set
       require(n > 45000L, s"most anchors must find a valid negative, got $n")
@@ -710,7 +705,7 @@ object ScaleSmoke {
     time(s"ticks→daily parquet ${rows / 1000000}M") {
       uniform.withColumn("day", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("day").parquet(land)
-      spark.read.parquet(land).count()
+      Probe.drain(spark.read.parquet(land))
     }
     // lazy: under a stage filter that skips the landing write, the read
     // must not run at all (the documented consumes-upstream caveat
@@ -718,7 +713,7 @@ object ScaleSmoke {
     lazy val landed = spark.read.parquet(land)
       .select("event_id", "user_id", "ts", "event_type", "value")
     time("parquet→hourly bars (q17 core)") {
-      operators.TimeSeries.ohlcBarsOf(landed).count()
+      Probe.drain(operators.TimeSeries.ohlcBarsOf(landed))
     }
     // incremental dedup-insert at 10M rows: three overlapping chunks
     // upsert into a fresh historic table — the guard anti-join must
@@ -732,12 +727,13 @@ object ScaleSmoke {
       sources.Sinks.upsertHistoric(chunk(0.0, 0.4), hist, Seq("event_id", "ts"))
       sources.Sinks.upsertHistoric(chunk(0.2, 0.7), hist, Seq("event_id", "ts"))
       sources.Sinks.upsertHistoric(chunk(0.5, 1.0), hist, Seq("event_id", "ts"))
-      val n = spark.read.parquet(hist).count()
-      require(n == landed.count(), s"overlap rows leaked: $n vs ${landed.count()}")
+      val n = Probe.drain(spark.read.parquet(hist))
+      val expected = Probe.drain(landed)
+      require(n == expected, s"overlap rows leaked: $n vs $expected")
       n
     }
     time("parquet→verticals gold (q28 core)") {
-      operators.TimeSeries.verticalsOf(landed).count()
+      Probe.drain(operators.TimeSeries.verticalsOf(landed))
     }
     time("silver import composite (q54 shape)") {
       // symbol-parse → PST gate → dim dedup → best-mark series over the
@@ -755,7 +751,7 @@ object ScaleSmoke {
         .groupBy(col("strike"), col("cp"), col("expiry"),
           date_trunc("minute", col("ts")).as("t"))
         .agg(max("value").as("mark"), count(lit(1)).as("n_obs"))
-      series.join(broadcast(dim), Seq("strike", "cp", "expiry")).count()
+      Probe.drain(series.join(broadcast(dim), Seq("strike", "cp", "expiry")))
     }
 
     // Skewed band-bucket stress for the d3 simhash join shape: half the
@@ -773,7 +769,7 @@ object ScaleSmoke {
              |   cast(xxhash64(id) as bigint) & -65536,
              |   cast(xxhash64(id * 7 + 3) as bigint))""".stripMargin).as("simhash"))
     time(s"simhash pairs skewed hot bucket ${nSkew / 2}") {
-      operators.Dedup.simhashPairs(skewFps).count()
+      Probe.drain(operators.Dedup.simhashPairs(skewFps))
     }
     spark.stop()
   }

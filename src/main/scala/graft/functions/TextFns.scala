@@ -14,15 +14,8 @@ object TextFns {
   /** Occurrences of `token` in `c` via length arithmetic — portable to
     * the DuckDB oracle (replace/length exist everywhere) and codegen'd.
     */
-  def countToken(c: Column, token: String): Column =
-    ((length(c) - length(regexp_replace(c, java.util.regex.Pattern.quote(token), "")))
-      / token.length).cast("long")
-
   private def countPlain(c: Column, token: String): Column =
     ((length(c) - length(replace(c, lit(token), lit("")))) / token.length).cast("long")
-
-  /** Whitespace word count. */
-  def wordCount(c: Column): Column = size(split(c, "\\s+"))
 
   /** q18: JSON field extraction from a raw payload column.
     * Reference analog: SCHWAB.JSON_TRANSACTIONS stores whole order JSON

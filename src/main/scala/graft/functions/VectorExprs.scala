@@ -1462,7 +1462,6 @@ object VectorExprs {
   def sigAgree(a: Column, b: Column): Column = toCol(SigAgreeCount(toExpr(a), toExpr(b)))
   def packSigns64(c: Column): Column = toCol(PackSigns64(toExpr(c)))
   def simhash64(c: Column): Column = toCol(SimHash64(toExpr(c)))
-  def minhashSig(c: Column, k: Int): Column = toCol(MinHashSig(toExpr(c), k))
   def intersectCount(a: Column, b: Column): Column = toCol(IntersectCount(toExpr(a), toExpr(b)))
   def tokenBitset(c: Column, vocab: TokenVocab): Column = toCol(TokenBitset(toExpr(c), vocab))
   def hashBitset(c: Column, numBits: Int): Column = toCol(HashBitset(toExpr(c), numBits))

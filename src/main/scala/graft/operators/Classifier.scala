@@ -118,7 +118,12 @@ object Classifier {
       .select(col("doc_id"), col("y"),
         array_remove(split(col("text"), " "), "").as("ws"))
       .repartition(parts, col("doc_id")).localCheckpoint(false)
-    val px = postingsOf(docs, buckets, wordsIn)
+    // postings of the labeled docs only: no other doc survives the
+    // gradient join, and `parts` is sized for the labeled docs — a
+    // corpus-wide posting table would collapse into those few partitions
+    val labeled = docsY.select("doc_id")
+    val px = postingsOf(docs.join(labeled, Seq("doc_id"), "left_semi"), buckets,
+        wordsIn.map(_.join(labeled, Seq("doc_id"), "left_semi")))
       .repartition(parts, col("doc_id")).localCheckpoint(false)
     val w = new Array[Double](buckets)
     var bias = 0.0

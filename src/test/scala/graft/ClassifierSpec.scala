@@ -49,6 +49,22 @@ class ClassifierSpec extends SparkSpec {
     assert(m1.bias == m2.bias && m1.losses == m2.losses)
   }
 
+  test("a small labeled subset of the corpus trains the same model as the pre-filtered labeled docs") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val labels = docs.filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"), when(length(col("text")) % 2 === 0, 1.0).otherwise(0.0).as("y"))
+    val labeledOnly = docs.join(labels.select("doc_id"), "doc_id")
+    def train(d: org.apache.spark.sql.DataFrame,
+        words: Option[org.apache.spark.sql.DataFrame] = None) =
+      Classifier.trainLogistic(d, labels, 256, iters = 3, lr = 10.0, wordsIn = words)
+    val expected = train(labeledOnly)
+    val words = Tables.tokLong(spark, sf).select("doc_id", "w")
+    for (m <- Seq(train(docs), train(docs, Some(words)))) {
+      assert(m.weights.toSeq == expected.weights.toSeq, "weights differ")
+      assert(m.bias == expected.bias && m.losses == expected.losses)
+    }
+  }
+
   test("HashedMargin expression == the posting-join formulation of the margin") {
     import spark.implicits._
     val docs = plantedDocs.select("doc_id", "text")

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Every registered query runs at sf0.001 and returns rows; targeted
-  * semantic assertions per operator family. The exact-value gate is the
-  * driver's DuckDB compare (tools/selfcheck.py locally). */
+/** Every registered query runs at sf0.001, drains every column of every
+  * row through the noop sink, returns rows and plans no cartesian
+  * product; targeted semantic assertions per operator family. The
+  * exact-value gate is the DuckDB oracle compare (tools/selfcheck.py). */
 class QueriesSpec extends SparkSpec {
 
   test("every oracleSql key has a queries entry") {
@@ -15,7 +16,11 @@ class QueriesSpec extends SparkSpec {
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs and returns rows at sf0.001") {
       val df = fn(spark, sf)
-      assert(df.count() > 0, s"$name returned no rows")
+      assert(Probe.drain(df) > 0, s"$name returned no rows")
+      // broadcast nested-loop joins stay allowed: tools/planaudit/README.md
+      // lists them as the intentional broadcast-query-set pattern
+      assert(!df.queryExecution.executedPlan.toString.contains("CartesianProduct"),
+        s"$name plans a CartesianProduct")
     }
   }
 

@@ -34,9 +34,9 @@ fi
 PROBE_LIST="${PROBE_LIST:-d36_corpus_pipeline,d56_quality_classifier,q54_silver_import,q53_order_legs,d23_incremental_dedup,d42_substr_clip,q49_chain_flatten,d20_dup_clusters,d41_exact_substr,d3_simhash,d45_semdedup,d32_pq_ann}"
 # a probe-side hiccup must not lose the already-captured bench line:
 # the `|| true` keeps set -e/pipefail from killing the script when
-# WarmBench fails or the grep matches nothing (empty -> '{}' below)
+# the probe fails or the grep matches nothing (empty -> '{}' below)
 PROBES="$(SPARK_GRAFT_SF_DIR="$AMP_DIR" SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=32g \
-  sbt -batch "runMain graft.WarmBench $PROBE_LIST" 2>&1 | grep -o '{"metric":"warm_serial_sum".*}' | tail -1 || true)"
+  sbt -batch "runMain graft.Probe warm $PROBE_LIST" 2>&1 | grep -o '{"metric":"warm_serial_sum".*}' | tail -1 || true)"
 PROBES="${PROBES:-{\}}"
 OUT="BENCH_10x_r${ROUND}.json"
 python3 - "$OUT" <<PYEOF
